@@ -7,10 +7,10 @@ parallel maps (lib.rs:83-107,130-152).
 Ours: SHA-256. The *full* hash is the built-in ``F.sha2`` (JVM-side,
 whole-stage codegen, zero Python) — strictly faster than any UDF. The
 *partial* (head+tail window) hash is also expressible with built-ins via
-``substr``. The pandas-UDF variants exist because BASELINE.json's
-north_star mandates "SHA-256 content hashes computed in pandas UDF
-batches" — both are provided and produce identical digests; the pipeline
-uses the built-in by default and the UDF path is covered by tests.
+``substr``. The pandas-UDF variants (BASELINE.json's north_star names
+"SHA-256 content hashes computed in pandas UDF batches") are kept as
+reference implementations with identical digests, checked by tests; the
+pipeline always hashes with the built-ins.
 """
 
 from __future__ import annotations

@@ -240,7 +240,8 @@ def minhash_band_keys_udf(texts: pd.Series) -> pd.Series:
 def minhash_bands(signatures: pd.Series) -> pd.Series:
     """Band keys ``'m{band}:{hash-of-rows}'`` — one per LSH band. Explode
     JVM-side to get bucket rows; equal band key ⇒ candidate pair.
-    (Python variant; the pipeline hot path uses ``minhash_bands_col``.)"""
+    (String variant; the pipeline hot path folds long band keys inside
+    ``minhash_band_keys_udf``.)"""
     rows = NUM_PERM // LSH_BANDS
 
     def bands(sig: list[int] | None) -> list[str] | None:
@@ -251,23 +252,6 @@ def minhash_bands(signatures: pd.Series) -> pd.Series:
         return [f"m{i}:{int(v):x}" for i, v in enumerate(keys)]
 
     return signatures.map(bands)
-
-
-def minhash_bands_col(sig):
-    """JVM-side band keys: ``xxhash64(band_index, sig[4b..4b+3])`` per
-    band → ``array<long>``. Stays in whole-stage codegen, no Python, no
-    strings — band longs shuffle ~3× smaller than formatted keys."""
-    from pyspark.sql import functions as F
-
-    rows = NUM_PERM // LSH_BANDS
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.element_at(sig, b * rows + r + 1) for r in range(rows)]
-            )
-            for b in range(LSH_BANDS)
-        ]
-    )
 
 
 def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
@@ -291,7 +275,7 @@ def minhash_jaccard_udf(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
             b = np.stack(sig_b.values[valid])
             out[valid] = (a == b).mean(axis=1)
     # NULL signatures → NULL estimate, never NaN (Spark orders NaN above
-    # every number, so NaN would pass an `est_score >= gate` filter)
+    # every number, so NaN would pass any `>= threshold` filter)
     s = pd.Series(out, dtype="Float64")
     if n:
         s[~(sig_a.notna() & sig_b.notna()).values] = pd.NA

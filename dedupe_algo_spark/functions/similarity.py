@@ -34,8 +34,8 @@ def _null_safe(out: np.ndarray, nulls: np.ndarray) -> pd.Series:
 
 @pandas_udf(DoubleType())
 def pair_jaccard_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-    """Exact token-set Jaccard per pair (the confirm-stage score for
-    near-dups; cheap because blocking already pruned the pair count).
+    """Exact token-set Jaccard per pair — the pandas reference for the
+    confirm stage's codegen score (``scoring.token_jaccard_score``).
 
     Memory-lean formulation — this stage profiled as allocation-bound,
     not compute-bound (per-pair Python sets ran 4× slower per pair on a
@@ -77,7 +77,7 @@ def pair_jaccard_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
 def pair_containment_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
     """Exact token-set containment |A∩B|/min(|A|,|B|) per pair — the
     doc-in-doc dial (see operators/scoring.token_containment_score for
-    semantics; this is its pandas twin for the non-jvm_tokens path).
+    semantics; this is its pandas reference twin).
     Same memory-lean distinct-text cache as pair_jaccard_udf."""
     cache: dict[str, np.ndarray] = {}
 
@@ -98,9 +98,9 @@ def pair_containment_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
     for i, (a, b) in enumerate(zip(text_a.values, text_b.values)):
         if a is None or b is None:
             # NULL, not NaN: Spark orders NaN ABOVE every number, so a
-            # NaN score would PASS `score >= threshold` while the
-            # jvm_tokens path yields NULL and drops the pair — the two
-            # switchable paths must agree on NULL text
+            # NaN score would PASS `score >= threshold` while the JVM
+            # confirm yields NULL and drops the pair — the reference
+            # must agree with it on NULL text
             nulls[i] = True
             out[i] = 0.0
             continue

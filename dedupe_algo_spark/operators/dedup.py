@@ -28,9 +28,9 @@ The cascade's pruning semantics survive as grouping structure:
   pass — with the bytes in hand, SHA-256 over the full text costs the
   same scan either way.
 
-Hashes are built-in ``sha2`` (JVM, whole-stage codegen) by default; the
-pandas-UDF twins (north_star mandate) are switchable and
-digest-identical.
+Hashes are built-in ``sha2`` (JVM, whole-stage codegen); the
+digest-identical pandas-UDF twins stay exported from ``functions`` as
+reference implementations, not as a pipeline switch.
 """
 
 from __future__ import annotations
@@ -38,33 +38,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (
-    normalized_for_dedup,
-    partial_sha256_col,
-    partial_sha256_udf,
-    sha256_col,
-    sha256_udf,
-)
-from ..functions.minhash import minhash_band_keys_udf, minhash_udf
+from ..functions.hashing import normalized_for_dedup, partial_sha256_col, sha256_col
+from ..functions.minhash import minhash_band_keys_udf
+
+
+def _keyed_view(
+    pages: DataFrame, min_len: int, exact_key: str, with_signature: bool
+):
+    """The projection ``page_meta`` and ``page_meta_incremental`` share:
+    → (pages with ``text`` shorter than ``min_len`` dropped, the keyed
+    text column the exact cascade hashes, the trailing band-key columns).
+
+    The band keys are always computed over the RAW text — normalization
+    only re-keys the exact tier."""
+    if exact_key not in ("raw", "normalized"):
+        raise ValueError(f"unknown exact_key {exact_key!r}")
+    keyed = (
+        normalized_for_dedup(F.col("text"))
+        if exact_key == "normalized"
+        else F.col("text")
+    )
+    bands = (
+        [minhash_band_keys_udf(F.col("text")).alias("bands")]
+        if with_signature
+        else []
+    )
+    return pages.where(F.length("text") >= min_len), keyed, bands
 
 
 def page_meta(
     pages: DataFrame,
     min_len: int = 10,
-    use_pandas_udf: bool = False,
     with_signature: bool = True,
     with_ts: bool = False,
-    signature: str = "bands",
     exact_key: str = "raw",
 ) -> DataFrame:
     """One-pass map-side projection of everything dedup needs, with the
     text column dropped at the end of the pass. Zero shuffles.
 
-    ``signature="bands"`` (default) carries only the 32 LSH band keys
-    (~256B/row) — all the near-dup path needs when gating on band
-    collisions — so every shuffle downstream of the scan moves 4× fewer
-    signature bytes than the full 128-perm ``signature="sig"`` form
-    (which remains for callers that score MinHash-Jaccard estimates).
+    ``with_signature`` appends the 32 LSH band keys (``bands``, ~256B/row)
+    — all the near-dup path needs, since it gates on band collisions.
 
     ``exact_key="normalized"`` keys the whole exact cascade (size
     bucket, partial hash, full hash) on the CCNet-style normalized view
@@ -75,29 +88,16 @@ def page_meta(
     invariant) and still never shuffles. Identical raw texts always
     normalize identically, so normalized-mode clusters are a coarsening
     of raw-mode clusters, never a split."""
-    keyed = (
-        normalized_for_dedup(F.col("text"))
-        if exact_key == "normalized"
-        else F.col("text")
-    )
-    if exact_key not in ("raw", "normalized"):
-        raise ValueError(f"unknown exact_key {exact_key!r}")
-    partial = partial_sha256_udf(keyed) if use_pandas_udf else partial_sha256_col(keyed)
-    full = sha256_udf(keyed) if use_pandas_udf else sha256_col(keyed)
-    cols = [
+    kept, keyed, bands = _keyed_view(pages, min_len, exact_key, with_signature)
+    ts = [F.col("warc_ts")] if with_ts else []
+    return kept.select(
         F.col("url"),
+        *ts,
         F.length(keyed).cast("long").alias("text_len"),
-        partial.alias("partial_hash"),
-        full.alias("content_sha256"),
-    ]
-    if with_ts:
-        cols.insert(1, F.col("warc_ts"))
-    if with_signature:
-        if signature == "sig":
-            cols.append(minhash_udf(F.col("text")).alias("sig"))
-        else:
-            cols.append(minhash_band_keys_udf(F.col("text")).alias("bands"))
-    return pages.where(F.length("text") >= min_len).select(*cols)
+        partial_sha256_col(keyed).alias("partial_hash"),
+        sha256_col(keyed).alias("content_sha256"),
+        *bands,
+    )
 
 
 def page_meta_incremental(
@@ -105,7 +105,6 @@ def page_meta_incremental(
     memo: DataFrame,
     min_len: int = 10,
     with_signature: bool = True,
-    signature: str = "bands",
     exact_key: str = "raw",
 ) -> DataFrame:
     """Incremental variant of ``page_meta`` — the reference's cache fast
@@ -118,30 +117,21 @@ def page_meta_incremental(
     normalized run or vice versa). Shape: hashes are computed unconditionally map-side
     (they're one codegen pass) but the *published* value prefers the
     memoized one, so downstream grouping keys are stable across runs
-    even if the hash function version changes; signatures are computed
-    only where needed.
+    even if the hash function version changes.
 
     Returns the same schema as ``page_meta`` (+ warc_ts) plus a
-    ``cache_hit`` flag for audit. ``signature`` mirrors ``page_meta``:
-    "bands" (default, the slim flagship form) or "sig" (full 128-perm).
+    ``cache_hit`` flag for audit.
     """
     from ..sources.memo import validity_join
 
-    if exact_key not in ("raw", "normalized"):
-        raise ValueError(f"unknown exact_key {exact_key!r}")
-    keyed = (
-        normalized_for_dedup(F.col("text"))
-        if exact_key == "normalized"
-        else F.col("text")
-    )
-    base = pages.where(F.length("text") >= min_len).select(
+    kept, keyed, bands = _keyed_view(pages, min_len, exact_key, with_signature)
+    base = kept.select(
         "url",
         "warc_ts",
         F.length(keyed).cast("long").alias("text_len"),
         F.col("text"),
     )
-    joined = validity_join(base, memo)
-    cols = [
+    return validity_join(base, memo).select(
         F.col("url"),
         F.col("warc_ts"),
         F.col("text_len"),
@@ -152,13 +142,8 @@ def page_meta_incremental(
             "content_sha256"
         ),
         F.col("reused_sha256").isNotNull().alias("cache_hit"),
-    ]
-    if with_signature:
-        if signature == "sig":
-            cols.append(minhash_udf(F.col("text")).alias("sig"))
-        else:
-            cols.append(minhash_band_keys_udf(F.col("text")).alias("bands"))
-    return joined.select(*cols)
+        *bands,
+    )
 
 
 def assign_exact(meta: DataFrame) -> DataFrame:
@@ -173,7 +158,6 @@ def assign_exact(meta: DataFrame) -> DataFrame:
 def exact_dup_assignments(
     pages: DataFrame,
     min_len: int = 10,
-    use_pandas_udf: bool = False,
     keep_singletons: bool = False,
 ) -> DataFrame:
     """→ (url, text_len, content_sha256, cluster_size, cluster_id).
@@ -181,9 +165,7 @@ def exact_dup_assignments(
     ``cluster_id`` = min(url) within the (text_len, sha256) group —
     deterministic under any row order.
     """
-    meta = page_meta(
-        pages, min_len=min_len, use_pandas_udf=use_pandas_udf, with_signature=False
-    )
+    meta = page_meta(pages, min_len=min_len, with_signature=False)
     out = assign_exact(meta).select(
         "url",
         "text_len",

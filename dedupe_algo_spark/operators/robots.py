@@ -49,6 +49,26 @@ ROBOTS_RULES_SCHEMA = (
 ROBOTS_MAX_BYTES = 500 * 1024
 
 
+def _capped_body(body) -> str:
+    """``body`` (str or bytes) as text, cut to ``ROBOTS_MAX_BYTES`` of
+    UTF-8 so str and binary inputs truncate at the same byte boundary.
+    A line the cut lands inside is dropped whole: parsing its head
+    would invent a shorter, broader rule (``Allow: /publ`` out of
+    ``Allow: /public/docs``) that can win a longest-match contest."""
+    if isinstance(body, (bytes, bytearray)):
+        raw = bytes(body)
+    elif isinstance(body, str):
+        raw = body.encode("utf-8", errors="replace")
+        if len(raw) <= ROBOTS_MAX_BYTES:
+            return body
+    else:
+        return body or ""
+    cut = raw[:ROBOTS_MAX_BYTES]
+    if raw[ROBOTS_MAX_BYTES : ROBOTS_MAX_BYTES + 1] not in (b"", b"\n", b"\r"):
+        cut = cut[: max(cut.rfind(b"\n"), cut.rfind(b"\r")) + 1]
+    return cut.decode("utf-8", errors="replace")
+
+
 def parse_robots(
     bodies: DataFrame, host_col: str = "host", body_col: str = "body"
 ) -> DataFrame:
@@ -57,28 +77,16 @@ def parse_robots(
     following Allow/Disallow block; rules before any agent line are
     ignored; comments (#) and unknown directives are skipped; empty
     Disallow emits nothing. Bodies beyond ``ROBOTS_MAX_BYTES`` are
-    truncated at the limit (RFC 9309 §2.5)."""
+    truncated at the last whole line within the limit (RFC 9309 §2.5)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for host, body in zip(pdf[host_col], pdf[body_col]):
-                if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body)[:ROBOTS_MAX_BYTES].decode(
-                        "utf-8", errors="replace"
-                    )
-                elif isinstance(body, str):
-                    # cap on the encoded length so str and binary
-                    # inputs truncate at the same byte boundary
-                    raw = body.encode("utf-8", errors="replace")
-                    if len(raw) > ROBOTS_MAX_BYTES:
-                        body = raw[:ROBOTS_MAX_BYTES].decode(
-                            "utf-8", errors="replace"
-                        )
                 agents: list[str] = []
                 in_group_body = False
                 order = 0
-                for raw in (body or "").splitlines():
+                for raw in _capped_body(body).splitlines():
                     line = raw.split("#", 1)[0].strip()
                     if not line or ":" not in line:
                         continue

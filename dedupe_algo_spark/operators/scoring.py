@@ -3,15 +3,17 @@
 Two-tier design (north_star: "batched Jaro-Winkler/Levenshtein +
 MinHash-Jaccard"):
 
-1. **Estimate** — MinHash-Jaccard from the signatures already carried by
-   the bucket rows. Signature joins are pair-side-small (AQE broadcasts
-   the pair list), so the 1KB sigs stream map-side and nothing wide
-   shuffles. Pairs far below threshold (the vast majority) die here.
-2. **Confirm** — exact token-set Jaccard over the texts, but only for
-   estimate-survivors: the text column is re-read from the source and
-   joined against the (tiny) survivor list — again pair-side-small, so
-   text never shuffles. Jaro-Winkler / Levenshtein scorers are available
-   for fielded-record linkage via the same join shape.
+1. **Estimate** — ``band_gate``: the number of LSH bands a pair
+   collided in is Binomial(bands, J^rows), so thresholding the count
+   ``candidate_pairs(..., with_counts=True)`` already produced gates on
+   MinHash-Jaccard with no signature join and no extra shuffle. Pairs
+   far below threshold (the vast majority) die here.
+2. **Confirm** — ``confirm_pairs``: exact token-set Jaccard over the
+   texts, but only for gate survivors: the text column is re-read from
+   the source and joined against the (tiny) survivor list —
+   pair-side-small, so text never shuffles. Jaro-Winkler / Levenshtein
+   scorers are available for fielded-record linkage via the same join
+   shape.
 
 The reference analog is pass 3's full-hash byte-confirm after the cheap
 partial-hash gate (lib.rs:130-160) — same cheap-gate-then-confirm shape,
@@ -23,16 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.minhash import minhash_jaccard_udf
-from ..functions.similarity import pair_jaccard_udf
-
 DEFAULT_THRESHOLD = 0.80
-DEFAULT_ESTIMATE_GATE = 0.55  # pre-filter margin below the confirm threshold
 
 # ≥2 band collisions out of 32 bands × 4 rows: P(pass | J=0.7) ≈ 0.998,
-# P(pass | J=0.3) ≈ 0.03 — same recall as the signature-join estimate at
-# the 0.55 gate, zero additional shuffle (the count rides the bucket
-# self-join's own exchange).
+# P(pass | J=0.3) ≈ 0.03 — zero additional shuffle (the count rides the
+# bucket self-join's own exchange).
 DEFAULT_MIN_BAND_MATCHES = 2
 
 # Broadcasting the candidate url set (≈60B/url) stays executor-safe well
@@ -148,51 +145,14 @@ def band_gate(
     return pairs_with_counts.where(F.col("n_shared") >= min_matches)
 
 
-def estimate_pairs(pairs: DataFrame, sigs: DataFrame, gate: float) -> DataFrame:
-    """→ pairs with ``est_score`` ≥ gate. ``sigs`` is (url, sig).
-
-    Signature-join estimate (exact MinHash-Jaccard over the full
-    signatures). The flagship pipeline gates on band-collision counts
-    instead (``band_gate``); this path remains for direct use where the
-    caller wants the numeric estimate. It rides the same one-pass
-    melt/pivot join as the confirm tier (``pair_value_join``) — the
-    classic double sig join shuffled the |reps|×1KB signature table
-    TWICE (the job's second-largest exchange at 10^12 rows) and raced
-    two AQE query stages to fill a cold cache; here the signatures
-    cross one join exchange and the pivot carries each pair's two
-    sigs once.
-
-    Contract (sharpened vs the old double join): ``pairs`` is projected
-    to bare ``(url_a, url_b)`` — pass-through columns are NOT preserved
-    (join the result back on the pair key if you need them), and
-    ``sigs`` must carry ONE row per url (true of every signature table
-    this engine builds; a duplicate url would collapse to an arbitrary
-    ``first`` in the pivot rather than fan out per combination). The
-    explicit not-null filter keeps the inner-join drop semantics — a
-    pair with a side absent from ``sigs`` is dropped, not scored — as
-    structural defense-in-depth: it does not depend on the estimate
-    UDF's own guarantee of returning NULL (never NaN, which Spark
-    orders above every number) on a null side, minhash.py:293-297."""
-    joined = pair_value_join(
-        pairs.select("url_a", "url_b"),
-        sigs.select("url", F.col("sig").alias("_v")),
-        "_v",
-    ).where(F.col("_ta").isNotNull() & F.col("_tb").isNotNull())
-    est = joined.withColumn(
-        "est_score", minhash_jaccard_udf(F.col("_ta"), F.col("_tb"))
-    ).drop("_ta", "_tb")
-    return est.where(F.col("est_score") >= gate)
-
-
 def confirm_pairs(
     candidates: DataFrame,
     pages: DataFrame,
     threshold: float,
-    jvm_tokens: bool = True,
     tracker=None,
     scorer: str = "jaccard",
 ) -> DataFrame:
-    """Exact token-Jaccard confirm on estimate survivors.
+    """Exact token-Jaccard confirm on band-gate survivors.
     → (url_a, url_b, score).
 
     ``scorer`` selects the pass-3 similarity (north_star names the
@@ -207,8 +167,7 @@ def confirm_pairs(
     shape, so text still never shuffles. ``"containment"`` swaps the
     token-set denominator for min(|A|,|B|) — the doc-in-doc dial
     (syndicated article embedded in a longer page scores 1.0 where its
-    Jaccard sinks); identical plan to "jaccard" on both the jvm_tokens
-    and pandas paths. ``"tfidf"`` scores pairs by
+    Jaccard sinks); identical plan to "jaccard". ``"tfidf"`` scores pairs by
     corpus-IDF-weighted cosine (operators/corpus_stats.py) — the dial
     when candidate pages share heavy boilerplate that unweighted token
     Jaccard over-credits; it adds ONE corpus-wide slim aggregate (the
@@ -239,20 +198,18 @@ def confirm_pairs(
     gates a plan-time decision (the broadcast hint) for the very next
     job, so no earlier action exists to ride.
 
-    ``jvm_tokens`` (default): each slice row is tokenized ONCE into a
-    distinct-token array during the carve-out, and the per-pair Jaccard
-    is ``array_intersect``/``size`` — whole-stage codegen, zero Python
-    in the confirm stage. The pandas-UDF path remains switchable; both
-    produce identical scores up to token-hash collisions (each path
-    hashes tokens — 32-bit Murmur3 here, 64-bit ``pd.util.hash_array``
-    there — so agreement is exact except with probability ≈ n²/2³³ per
-    doc, the JVM side's collision rate)
-    on ANY input: the JVM tokenizer is ``TOKEN_SPLIT_RE`` below, whose
-    character class exactly reproduces Python ``str.split()`` (Unicode
-    White_Space via ``(?U)\\s`` plus the U+001C–001F separators Python's
-    ``isspace`` adds) — web text is full of U+00A0/U+2009 etc., so an
-    ASCII-only ``\\s+`` would flip threshold decisions between the two
-    paths and against the MinHash shingler (Python split).
+    Token scorers ("jaccard", "containment"): each slice row is
+    tokenized ONCE into a distinct-token-hash array during the
+    carve-out, and the per-pair score is ``array_intersect``/``size`` —
+    whole-stage codegen, zero Python in the confirm stage. The tokenizer
+    is ``TOKEN_SPLIT_RE``, whose character class exactly reproduces
+    Python ``str.split()`` (Unicode White_Space via ``(?U)\\s`` plus the
+    U+001C–001F separators Python's ``isspace`` adds) — web text is full
+    of U+00A0/U+2009 etc., so an ASCII-only ``\\s+`` would flip
+    threshold decisions against the MinHash shingler (Python split) and
+    the pandas reference UDFs (``pair_jaccard_udf`` /
+    ``pair_containment_udf``), which agree with this path up to
+    token-hash collisions (P ≈ n²/2³³ per doc).
 
     ``tracker`` (a :class:`~dedupe_algo_spark.tracking.PersistTracker`)
     registers the persisted pair list for release once the caller has
@@ -313,7 +270,7 @@ def confirm_pairs(
         else:
             raise ValueError(f"unknown scorer {scorer!r}")
         scored = pair_value_join(cand, slice_, "_t").withColumn("score", score)
-    elif jvm_tokens:
+    else:
         # Token identity is a 32-bit Murmur3 hash (F.hash → native INT),
         # not the string: the pair join's array_intersect then compares
         # ints instead of hashing and equality-checking strings per
@@ -344,26 +301,4 @@ def confirm_pairs(
         scored = pair_value_join(cand, slice_, "_toks").withColumn(
             "score", score
         )
-    else:
-        from ..functions.similarity import pair_containment_udf
-
-        slice_ = sliced.select("url", F.col("text").alias("_t"))
-        pair_udf = (
-            pair_containment_udf if scorer == "containment" else pair_jaccard_udf
-        )
-        scored = pair_value_join(cand, slice_, "_t").withColumn(
-            "score", pair_udf(F.col("_ta"), F.col("_tb"))
-        )
     return scored.where(F.col("score") >= threshold).select("url_a", "url_b", "score")
-
-
-def score_pairs(
-    pairs: DataFrame,
-    texts: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    tracker=None,
-) -> DataFrame:
-    """Single-tier exact scoring (kept for direct use/tests):
-    → (url_a, url_b, score) with token-Jaccard ≥ threshold. Pass a
-    ``PersistTracker`` to own the intermediates' cache lifetime."""
-    return confirm_pairs(pairs, texts, threshold, tracker=tracker)

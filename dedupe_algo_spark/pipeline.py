@@ -8,7 +8,8 @@ Spark:
         text dropped before any shuffle               (passes 1-3 compute)
       → exact grouping on (len, sha256)               (1 slim shuffle)
       → collapse to one representative per text       (scale lever)
-      → JVM xxhash64 LSH bands → (long,url) self-join (pass-1 generalized)
+      → LSH band keys (folded in the signature UDF) → (long,url)
+        self-join                                     (pass-1 generalized)
       → tier-1 gate = band-collision count (binomial in Jaccard; rides
         the self-join's shuffle, no signature joins)
       → tier-2 exact token-Jaccard confirm (text re-read, candidate urls
@@ -37,14 +38,12 @@ from .operators.candidates import (
     candidate_pairs,
 )
 from .operators.cluster import connected_components
-from .operators.dedup import assign_exact, page_meta
+from .operators.dedup import assign_exact, page_meta, page_meta_incremental
 from .operators.scoring import (
-    DEFAULT_ESTIMATE_GATE,
     DEFAULT_MIN_BAND_MATCHES,
     DEFAULT_THRESHOLD,
     band_gate,
     confirm_pairs,
-    estimate_pairs,
 )
 
 
@@ -88,12 +87,9 @@ def dedup_pipeline(
     pages: DataFrame,
     min_len: int = 10,
     threshold: float = DEFAULT_THRESHOLD,
-    estimate_gate: float = DEFAULT_ESTIMATE_GATE,
     min_band_matches: int = DEFAULT_MIN_BAND_MATCHES,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    use_pandas_udf_hash: bool = False,
     include_near: bool = True,
-    exact_confirm: bool = True,
     scorer: str = "jaccard",
     exact_key: str = "raw",
     memo=None,
@@ -107,8 +103,8 @@ def dedup_pipeline(
     to the audit table even in a plain un-checkpointed run; pass
     ``runner.CheckpointedRun.stage`` for resumable stage commits on top,
     or ``lambda name, fn: fn()`` to opt out entirely.
-    ``exact_confirm=False`` skips tier-2 (signature estimate only —
-    cheaper, slightly softer precision near the threshold).
+    The near path is always LSH band keys → band-collision gate
+    (``min_band_matches``) → exact confirm at ``threshold``.
     ``scorer`` selects the tier-2 similarity ("jaccard" | "jaro_winkler"
     | "levenshtein" | "ngram_jaccard" — see
     :func:`~.operators.scoring.confirm_pairs`).
@@ -134,44 +130,18 @@ def dedup_pipeline(
 
         stage = audit_stage_hook(pages.sparkSession, tracker=tracker)
 
-    # Bands-only signatures unless the no-confirm path needs the full
-    # 128-perm sig for its numeric MinHash-Jaccard estimate: band keys
-    # are 32 longs/row vs 128, so the exact-grouping shuffle and the
-    # rep-signature slice move 4× fewer signature bytes.
-    sig_mode = "sig" if (include_near and not exact_confirm) else "bands"
-    if memo is not None:
-        from .operators.dedup import page_meta_incremental
+    def scan_meta():
+        # a memo run reuses validated hashes (the cache fast path); both
+        # paths publish identical hash values and the same band keys
+        kw = dict(min_len=min_len, with_signature=include_near, exact_key=exact_key)
+        if memo is None:
+            return page_meta(pages, **kw)
+        return page_meta_incremental(pages, memo.read(), **kw)
 
-        meta = tracker.persist(
-            stage(
-                "page_meta",
-                lambda: page_meta_incremental(
-                    pages,
-                    memo.read(),
-                    min_len=min_len,
-                    with_signature=include_near,
-                    signature=sig_mode,
-                    exact_key=exact_key,
-                ),
-            )
-        )
-    else:
-        meta = tracker.persist(
-            stage(
-                "page_meta",
-                lambda: page_meta(
-                    pages,
-                    min_len=min_len,
-                    use_pandas_udf=use_pandas_udf_hash,
-                    with_signature=include_near,
-                    signature=sig_mode,
-                    exact_key=exact_key,
-                ),
-            )
-        )
+    meta = tracker.persist(stage("page_meta", scan_meta))
 
     # persisted: the exact-grouping window feeds four consumers (dup
-    # view, star edges, rep signatures, final cluster join) — without
+    # view, star edges, rep band keys, final cluster join) — without
     # this the 200MB window shuffle re-runs per consumer
     assigned = tracker.persist(assign_exact(meta))
     exact_dups = assigned.where(F.col("cluster_size") >= 2).select(
@@ -195,36 +165,26 @@ def dedup_pipeline(
     )
 
     if include_near:
-        rep_keys = assigned.where(F.col("url") == F.col("rep_url")).select(
-            "url", sig_mode if sig_mode == "sig" else "bands"
+        rep_bands = assigned.where(F.col("url") == F.col("rep_url")).select(
+            "url", "bands"
         )
 
         def near():
             # Estimate tier = LSH band-collision count: the binomial
-            # collision count over the self-join's own shuffle replaces
-            # the two full-signature joins (each shuffles |reps|×1KB of
-            # sigs — the job's second-largest exchange at 4M pages).
-            if sig_mode == "sig":
-                from .operators.candidates import bucket_table_from_sigs
-
-                buckets = bucket_table_from_sigs(rep_keys)
-            else:
-                buckets = bucket_table_from_bands(rep_keys)
+            # collision count rides the self-join's own shuffle, so no
+            # signature table is ever joined back onto the pairs.
             pairs = candidate_pairs(
-                buckets, max_bucket=max_bucket, with_counts=True, tracker=tracker
+                bucket_table_from_bands(rep_bands),
+                max_bucket=max_bucket,
+                with_counts=True,
+                tracker=tracker,
             )
             cands = band_gate(pairs, min_matches=min_band_matches).select(
                 "url_a", "url_b"
             )
-            if exact_confirm:
-                return confirm_pairs(
-                    cands, pages, threshold=threshold, tracker=tracker,
-                    scorer=scorer,
-                )
-            est = estimate_pairs(cands, rep_keys, gate=estimate_gate)
-            return est.select(
-                "url_a", "url_b", F.col("est_score").alias("score")
-            ).where(F.col("score") >= threshold)
+            return confirm_pairs(
+                cands, pages, threshold=threshold, tracker=tracker, scorer=scorer
+            )
 
         near_edges = stage("near_edges", near)
         all_edges = exact_edges.unionByName(near_edges)

@@ -1547,7 +1547,7 @@ def q_minhash_pair_stats(spark, sf_dir):
     dups + ≤1-edit nears) and 12 in the 0.9 bin; the full pair list is
     the rows-only query, this rollup is its precomputed-truth twin."""
     from .operators.candidates import bucket_table, candidate_pairs
-    from .operators.scoring import score_pairs
+    from .operators.scoring import DEFAULT_THRESHOLD, confirm_pairs
     from .synth import synth_pages
 
     from .tracking import PersistTracker
@@ -1556,7 +1556,7 @@ def q_minhash_pair_stats(spark, sf_dir):
     pages = synth_pages(spark, 2_000).select("url", "text")
     pairs = candidate_pairs(bucket_table(pages, use_cheap_key=False))
     stats = (
-        score_pairs(pairs, pages, tracker=tracker)
+        confirm_pairs(pairs, pages, DEFAULT_THRESHOLD, tracker=tracker)
         .groupBy(F.round("score", 1).alias("score_bin"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -1583,7 +1583,7 @@ def q_minhash_dup_pairs(spark, sf_dir):
     recall+precision+score gate on banding, the hot-bucket path, and
     the confirm tier at once."""
     from .operators.candidates import bucket_table, candidate_pairs
-    from .operators.scoring import score_pairs
+    from .operators.scoring import DEFAULT_THRESHOLD, confirm_pairs
     from .synth import synth_pages
 
     from .tracking import PersistTracker
@@ -1591,9 +1591,9 @@ def q_minhash_dup_pairs(spark, sf_dir):
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
     pairs = candidate_pairs(bucket_table(pages, use_cheap_key=False))
-    out = score_pairs(pairs, pages, tracker=tracker).select(
-        "url_a", "url_b", F.round("score", 4).alias("score")
-    )
+    out = confirm_pairs(
+        pairs, pages, DEFAULT_THRESHOLD, tracker=tracker
+    ).select("url_a", "url_b", F.round("score", 4).alias("score"))
     return _eager(out, tracker.release)
 
 
@@ -4487,15 +4487,16 @@ def q_pr_curve(spark, sf_dir):
     each metric one IEEE division — hash-exact."""
     from .operators.candidates import bucket_table, candidate_pairs
     from .operators.linkage import pr_curve
-    from .operators.scoring import score_pairs
+    from .operators.scoring import DEFAULT_THRESHOLD, confirm_pairs
     from .synth import synth_labels, synth_pages
     from .tracking import PersistTracker
 
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
-    scored = score_pairs(
+    scored = confirm_pairs(
         candidate_pairs(bucket_table(pages, use_cheap_key=False)),
         pages,
+        DEFAULT_THRESHOLD,
         tracker=tracker,
     ).select("url_a", "url_b", F.round("score", 4).alias("score"))
     pg = pages.selectExpr("url", f"{_SPARK_PLANTED_I} AS i")

@@ -20,6 +20,35 @@ from pyspark.sql import SparkSession
 # size is our analog).
 ARROW_MAX_RECORDS = 10_000
 
+# 16g, NOT the machine's full 128g: huge heaps measurably degrade this
+# workload (48g heap ran the map-side UDF stage 2-3.5x slower at
+# local[32] than 16g — G1 with a ~30GB young gen thrashes page faults
+# under concurrent Arrow allocation), and a real cluster gives each
+# executor single-digit GB anyway.
+DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def driver_memory(mem_total_kb: int | None) -> str:
+    """Default driver heap: ``min(16g, MemTotal/4)``, or 16g when the
+    machine's MemTotal is unknown. A quarter leaves room for the Python
+    workers, Arrow buffers and the OS cache on a small host, where a
+    16g heap on a 16 GB box gets the JVM OOM-killed."""
+    if not mem_total_kb:
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(DRIVER_MEM_CAP_MB, mem_total_kb // 4 // 1024)}m"
+
+
+def _mem_total_kb() -> int | None:
+    """MemTotal from ``/proc/meminfo`` in kB; None where unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
 
 def get_spark(
     app_name: str = "dedupe_algo_spark",
@@ -84,12 +113,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS),
         )
-        # 16g, NOT the machine's full 128g: huge heaps measurably degrade
-        # this workload (48g heap ran the map-side UDF stage 2-3.5x
-        # slower at local[32] than 16g — G1 with a ~30GB young gen
-        # thrashes page faults under concurrent Arrow allocation), and a
-        # real cluster gives each executor single-digit GB anyway.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or driver_memory(_mem_total_kb()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

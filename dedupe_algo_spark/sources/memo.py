@@ -47,10 +47,9 @@ class HashMemo:
     same statement is a ``MERGE INTO`` against a table partitioned the
     same way (the manifest swap = the snapshot commit).
 
-    Legacy layouts (a pre-manifest flat or ``shard=k``-partitioned
-    parquet dir) are detected and migrated in place on first upsert:
-    every shard is treated as touched once, after which the memo is
-    manifested."""
+    The manifest is the only layout: a directory without one (never
+    upserted, or a first upsert that died before its commit) reads as
+    an empty memo."""
 
     def __init__(self, spark: SparkSession, path: str, n_shards: int = 16):
         self.spark = spark
@@ -79,8 +78,7 @@ class HashMemo:
 
     def _gc(self, manifest: dict) -> None:
         """Remove everything under ``path`` not referenced by the
-        committed manifest (replaced shard versions, crash orphans,
-        migrated legacy files)."""
+        committed manifest (replaced shard versions, crash orphans)."""
         keep = set(manifest["shards"].values()) | {MANIFEST}
         for entry in os.listdir(self.path):
             if entry in keep:
@@ -103,41 +101,15 @@ class HashMemo:
         return self.spark.createDataFrame([], MEMO_SCHEMA)
 
     def read(self, shards: "list[int] | None" = None) -> DataFrame:
-        manifest = self._load_manifest()
-        if manifest is not None:
-            dirs = [
-                os.path.join(self.path, d)
-                for k, d in manifest["shards"].items()
-                if shards is None or int(k) in shards
-            ]
-            if not dirs:
-                return self._empty()
-            return self.spark.read.parquet(*dirs).select(
-                *MEMO_SCHEMA.fieldNames()
-            )
-        if os.path.exists(self.path):  # legacy flat / shard= layout
-            # ignore hidden entries (staged-but-uncommitted shard dirs,
-            # _SUCCESS) and manifest leftovers (a crash inside
-            # _commit_manifest — after the MANIFEST.json.tmp-* write,
-            # before os.replace — leaves a visible tmp file but no data):
-            # a crashed first-ever upsert must read as the previous
-            # (empty) state, not raise on a data-less parquet read
-            visible = [
-                e
-                for e in os.listdir(self.path)
-                if not e.startswith((".", "_", MANIFEST))
-            ]
-            if not visible:
-                return self._empty()
-            df = self.spark.read.parquet(self.path).select(
-                *MEMO_SCHEMA.fieldNames()
-            )
-            if shards is not None:
-                df = self._sharded(df).where(F.col("shard").isin(shards)).drop(
-                    "shard"
-                )
-            return df
-        return self._empty()
+        manifest = self._load_manifest() or {"shards": {}}
+        dirs = [
+            os.path.join(self.path, d)
+            for k, d in manifest["shards"].items()
+            if shards is None or int(k) in shards
+        ]
+        if not dirs:
+            return self._empty()
+        return self.spark.read.parquet(*dirs).select(*MEMO_SCHEMA.fieldNames())
 
     # -- upsert ---------------------------------------------------------
 
@@ -149,7 +121,6 @@ class HashMemo:
         never opened, and the swap of all touched shards is one atomic
         manifest replace."""
         manifest = self._load_manifest()
-        legacy = manifest is None and os.path.exists(self.path)
         if manifest is not None:
             # adopt the committed shard count BEFORE computing any shard
             # column: a memo committed with n_shards=4 reopened with the
@@ -159,13 +130,9 @@ class HashMemo:
         else:
             manifest = {"n_shards": self.n_shards, "shards": {}}
         u = self._sharded(updates.select(*MEMO_SCHEMA.fieldNames()))
-        if legacy:
-            # one full rewrite migrates the pre-manifest layout
-            touched = list(range(self.n_shards))
-        else:
-            touched = sorted(
-                r["shard"] for r in u.select("shard").distinct().collect()
-            )
+        touched = sorted(
+            r["shard"] for r in u.select("shard").distinct().collect()
+        )
         cur = self.read(shards=touched)
         merged = (
             u.drop("shard")
@@ -190,11 +157,9 @@ class HashMemo:
         new_shards = dict(manifest["shards"])
         for k in touched:
             src = os.path.join(tmp, f"shard={k}")
-            # dot-prefixed: Spark's file listing skips hidden entries, so
-            # staged-but-uncommitted shards are invisible to the legacy
-            # (manifest-less) read path — a crash between staging and the
-            # manifest commit can never surface uncommitted rows or break
-            # partition discovery on a pre-manifest layout
+            # dot-prefixed: a staged-but-uncommitted shard is hidden from
+            # Spark's file listing, and only the manifest ever names it,
+            # so a crash before the commit never surfaces its rows
             staged = f".shard-{k}-{txn}"
             if os.path.exists(src):
                 os.rename(src, os.path.join(self.path, staged))

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import os
 import zlib
 from calendar import timegm
 from time import gmtime, strftime, strptime
@@ -536,27 +537,32 @@ def read_blobs(spark, path: str) -> DataFrame:
 
 def _local_path(p: str) -> str:
     """Strip the ``file:`` scheme ``binaryFile``/``warc_cdx_index``
-    carry so task-side ``open()`` works on the same identifiers."""
-    if p.startswith("file://"):
-        return p[7:]
-    if p.startswith("file:"):
-        return p[5:]
-    return p
+    carry so task-side ``open()`` works on the same identifiers:
+    ``file:/x``, ``file:///x`` and ``file://localhost/x`` all name
+    ``/x``. ``urlsplit`` rather than ``urlparse``, which would cut a
+    ``;...`` tail off the file name as URL params."""
+    from urllib.parse import urlsplit
+
+    if not p.startswith("file:"):
+        return p
+    u = urlsplit(p, allow_fragments=False)
+    if u.netloc not in ("", "localhost"):
+        raise ValueError(f"{p!r}: file URL names a remote host {u.netloc!r}")
+    return u.path + (f"?{u.query}" if u.query else "")
 
 
 def _list_segment_files(path: str) -> list[str]:
     """``binaryFile``-style listing for the ranged reader: a directory
     lists its files, anything else is a glob pattern."""
     import glob as _glob
-    import os as _os
 
     p = _local_path(path)
     cands = (
-        sorted(_glob.glob(_os.path.join(p, "*")))
-        if _os.path.isdir(p)
+        sorted(_glob.glob(os.path.join(p, "*")))
+        if os.path.isdir(p)
         else sorted(_glob.glob(p))
     )
-    return [c for c in cands if _os.path.isfile(c)]
+    return [c for c in cands if os.path.isfile(c)]
 
 
 def file_member_geometry(
@@ -578,36 +584,38 @@ def file_member_geometry(
         raise FileNotFoundError(
             f"file_member_geometry: no segment files under {path!r}"
         )
+    empty = [f for f in files if os.path.getsize(f) == 0]
+    if empty:
+        # a truncated-to-empty download would otherwise yield no
+        # members and drop out of the ingest without a trace
+        raise ValueError(f"file_member_geometry: empty segment files {empty!r}")
     if num_partitions is None:
         num_partitions = min(len(files), spark.sparkContext.defaultParallelism)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import mmap
-        import os as _os
 
         for pdf in batches:
             for p in pdf["warc_file"]:
-                rows = []
-                if _os.path.getsize(p) > 0:
-                    with open(p, "rb") as fh, mmap.mmap(
-                        fh.fileno(), 0, access=mmap.ACCESS_READ
-                    ) as mm:
-                        if mm[:2] != b"\x1f\x8b":
-                            # a plain (uncompressed) .warc has no gzip
-                            # members — the member walk would yield
-                            # nothing and the file's pages would vanish
-                            # silently; the 'warc' (binaryFile) format
-                            # parses such files via its plain-bytes
-                            # passthrough, so point the caller there
-                            raise ValueError(
-                                f"{p}: not gzip — ranged ingest needs "
-                                "member-gzip segments; use "
-                                "input_format='warc' for plain WARCs"
-                            )
-                        rows = [
-                            (p, off, clen)
-                            for off, clen, _ in _iter_members_chunked(mm)
-                        ]
+                with open(p, "rb") as fh, mmap.mmap(
+                    fh.fileno(), 0, access=mmap.ACCESS_READ
+                ) as mm:
+                    if mm[:2] != b"\x1f\x8b":
+                        # a plain (uncompressed) .warc has no gzip
+                        # members — the member walk would yield
+                        # nothing and the file's pages would vanish
+                        # silently; the 'warc' (binaryFile) format
+                        # parses such files via its plain-bytes
+                        # passthrough, so point the caller there
+                        raise ValueError(
+                            f"{p}: not gzip — ranged ingest needs "
+                            "member-gzip segments; use "
+                            "input_format='warc' for plain WARCs"
+                        )
+                    rows = [
+                        (p, off, clen)
+                        for off, clen, _ in _iter_members_chunked(mm)
+                    ]
                 yield pd.DataFrame(
                     rows, columns=["warc_file", "offset", "length"]
                 )

@@ -8,12 +8,38 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from dedupe_algo_spark.functions.similarity import (
+    pair_containment_udf,
+    pair_jaccard_udf,
+)
 from dedupe_algo_spark.operators.candidates import candidate_pairs
 from dedupe_algo_spark.operators.scoring import band_gate, confirm_pairs
 
 
 def _buckets(spark, rows):
     return spark.createDataFrame(rows, "bucket_key long, url string")
+
+
+def _scores(scored, ndigits=None):
+    return {
+        (r["url_a"], r["url_b"]): (
+            r["score"] if ndigits is None else round(r["score"], ndigits)
+        )
+        for r in scored.collect()
+    }
+
+
+def _reference_scores(pairs, pages, threshold, pair_udf=pair_jaccard_udf):
+    """The pandas reference UDF applied directly to each pair's texts —
+    the oracle the codegen confirm must reproduce."""
+    ta = pages.select(F.col("url").alias("url_a"), F.col("text").alias("_ta"))
+    tb = pages.select(F.col("url").alias("url_b"), F.col("text").alias("_tb"))
+    return (
+        pairs.join(ta, "url_a")
+        .join(tb, "url_b")
+        .select("url_a", "url_b", pair_udf("_ta", "_tb").alias("score"))
+        .where(F.col("score") >= threshold)
+    )
 
 
 def test_candidate_pairs_with_counts_and_caps(spark):
@@ -50,8 +76,8 @@ def test_distinct_mode_unchanged(spark):
 
 def test_confirm_jvm_and_pandas_paths_identical(spark, pages_1k):
     """The codegen confirm (array_intersect over pre-tokenized slices)
-    and the pandas-UDF confirm must produce the same pairs with the
-    same exact scores."""
+    and the pandas reference UDF applied to the same pairs must produce
+    the same pairs with the same exact scores."""
     from dedupe_algo_spark.operators.candidates import (
         bucket_table_from_bands,
         candidate_pairs,
@@ -63,23 +89,17 @@ def test_confirm_jvm_and_pandas_paths_identical(spark, pages_1k):
     cands = band_gate(
         candidate_pairs(bucket_table_from_bands(rep), with_counts=True)
     ).select("url_a", "url_b")
-    jvm = {
-        (r["url_a"], r["url_b"]): round(r["score"], 9)
-        for r in confirm_pairs(cands, pages_1k, 0.5, jvm_tokens=True).collect()
-    }
-    pd_ = {
-        (r["url_a"], r["url_b"]): round(r["score"], 9)
-        for r in confirm_pairs(cands, pages_1k, 0.5, jvm_tokens=False).collect()
-    }
+    jvm = _scores(confirm_pairs(cands, pages_1k, 0.5), 9)
+    pd_ = _scores(_reference_scores(cands, pages_1k, 0.5), 9)
     assert jvm and jvm == pd_
 
 
 def test_confirm_tokenizer_unicode_parity(spark):
-    """JVM and pandas confirm paths must agree on non-ASCII whitespace:
-    Java's bare \\s+ is ASCII-only while Python str.split() is Unicode,
-    so HTML-derived text (U+00A0 nbsp, U+2009 thin space, U+3000
-    ideographic space, U+0085 NEL, U+001C file separator) would flip
-    threshold decisions between the switchable paths."""
+    """The JVM confirm must agree with the pandas reference UDF on
+    non-ASCII whitespace: Java's bare \\s+ is ASCII-only while Python
+    str.split() is Unicode, so HTML-derived text (U+00A0 nbsp, U+2009
+    thin space, U+3000 ideographic space, U+0085 NEL, U+001C file
+    separator) would flip threshold decisions against the reference."""
     texts = [
         ("u1", "foo bar baz"),
         ("u2", "foo bar baz"),
@@ -92,14 +112,8 @@ def test_confirm_tokenizer_unicode_parity(spark):
         [("u1", "u2"), ("u1", "u3"), ("u2", "u5"), ("u3", "u4"), ("u1", "u5")],
         "url_a string, url_b string",
     )
-    jvm = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, jvm_tokens=True).collect()
-    }
-    pd_ = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, jvm_tokens=False).collect()
-    }
+    jvm = _scores(confirm_pairs(pairs, pages, 0.0))
+    pd_ = _scores(_reference_scores(pairs, pages, 0.0))
     assert jvm == pd_
     # ground truth: u1/u2/u5 all tokenize to {foo, bar, baz}
     assert jvm[("u1", "u2")] == 1.0 and jvm[("u2", "u5")] == 1.0
@@ -255,8 +269,8 @@ def test_confirm_pairs_weighted_jaccard_scorer(spark):
 
 def test_confirm_pairs_containment_scorer(spark):
     """scorer='containment': |A∩B|/min(|A|,|B|) — a page embedded
-    verbatim in a longer page scores 1.0 while its Jaccard sinks;
-    jvm_tokens and pandas paths agree exactly."""
+    verbatim in a longer page scores 1.0 while its Jaccard sinks; the
+    JVM scorer and the pandas reference UDF agree exactly."""
     from dedupe_algo_spark.operators.scoring import confirm_pairs
 
     inner = "alpha beta gamma delta epsilon"
@@ -269,16 +283,8 @@ def test_confirm_pairs_containment_scorer(spark):
     pairs = spark.createDataFrame(
         [("u1", "u2"), ("u1", "u3")], "url_a string, url_b string"
     )
-    jvm = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="containment").collect()
-    }
-    pd_ = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(
-            pairs, pages, 0.0, jvm_tokens=False, scorer="containment"
-        ).collect()
-    }
+    jvm = _scores(confirm_pairs(pairs, pages, 0.0, scorer="containment"))
+    pd_ = _scores(_reference_scores(pairs, pages, 0.0, pair_containment_udf))
     assert jvm == pd_
     assert jvm[("u1", "u2")] == 1.0  # doc-in-doc
     assert jvm[("u1", "u3")] == 0.0
@@ -291,18 +297,21 @@ def test_confirm_pairs_containment_scorer(spark):
 
 
 def test_null_text_drops_pair_on_both_paths(spark):
-    """NULL text must yield a NULL score (dropped by >= threshold) on
-    the pandas path exactly like the JVM path — NaN would instead PASS
-    any threshold under Spark's NaN ordering."""
+    """NULL text, or a url absent from ``pages`` (u3), must yield a NULL
+    score (dropped by >= threshold) on the JVM token scorers and the
+    pandas-UDF scorers alike — NaN would instead PASS any threshold
+    under Spark's NaN ordering."""
     pages = spark.createDataFrame(
         [("u1", "real words here"), ("u2", None)], "url string, text string"
     )
-    pairs = spark.createDataFrame([("u1", "u2")], "url_a string, url_b string")
+    pairs = spark.createDataFrame(
+        [("u1", "u2"), ("u1", "u3")], "url_a string, url_b string"
+    )
     for kw in (
-        {"jvm_tokens": False},  # pandas jaccard
+        {},  # jaccard
         {"scorer": "jaro_winkler"},
         {"scorer": "damerau"},
-        {"scorer": "containment", "jvm_tokens": False},
+        {"scorer": "containment"},
     ):
         got = confirm_pairs(pairs, pages, 0.0, **kw).collect()
         assert got == [], kw
@@ -356,27 +365,3 @@ def test_dropped_buckets_audits_exactly_the_capped_keys(spark):
         for r in dropped_buckets(_buckets(spark, rows), max_bucket=5).collect()
     }
     assert hot == {(1, 10)}
-
-
-def test_estimate_pairs_drops_half_present_pairs(spark):
-    """estimate_pairs keeps the inner-join contract on the melt/pivot
-    path: a pair with a side absent from sigs is DROPPED before
-    scoring (explicit not-null filter — defense-in-depth on top of the
-    estimate UDF's own NULL-never-NaN guarantee, minhash.py:293-297;
-    a NaN leak would pass any gate under Spark's NaN-above-everything
-    ordering)."""
-    from dedupe_algo_spark.operators.scoring import estimate_pairs
-
-    sigs = spark.createDataFrame(
-        [("u1", [1, 2, 3, 4]), ("u2", [1, 2, 3, 4]), ("u4", [9, 9, 9, 9])],
-        "url string, sig array<bigint>",
-    )
-    pairs = spark.createDataFrame(
-        [("u1", "u2"), ("u1", "u3"), ("u3", "u2"), ("u1", "u4")],
-        "url_a string, url_b string",
-    )
-    got = {
-        (r["url_a"], r["url_b"]): r["est_score"]
-        for r in estimate_pairs(pairs, sigs, gate=0.5).collect()
-    }
-    assert got == {("u1", "u2"): 1.0}  # u3 pairs dropped; (u1,u4) est 0.0 < gate

@@ -85,17 +85,26 @@ def test_grouped_view_shape(spark, pages_1k):
 
 
 def test_udf_and_builtin_hash_agree(spark, pages_1k):
-    a = (
-        exact_dup_assignments(pages_1k, use_pandas_udf=False)
-        .orderBy("url")
-        .toPandas()
+    """The JVM ``sha2`` columns the pipeline hashes with produce the
+    same digests as the pandas-UDF reference twins, row for row."""
+    from dedupe_algo_spark.functions.hashing import (
+        partial_sha256_col,
+        partial_sha256_udf,
+        sha256_col,
+        sha256_udf,
     )
-    b = (
-        exact_dup_assignments(pages_1k, use_pandas_udf=True)
-        .orderBy("url")
-        .toPandas()
-    )
-    assert a.equals(b)
+
+    text = F.col("text")
+    rows = pages_1k.select(
+        sha256_col(text).alias("full_jvm"),
+        sha256_udf(text).alias("full_udf"),
+        partial_sha256_col(text).alias("partial_jvm"),
+        partial_sha256_udf(text).alias("partial_udf"),
+    ).collect()
+    assert len(rows) == 1000
+    for r in rows:
+        assert r["full_jvm"] == r["full_udf"]
+        assert r["partial_jvm"] == r["partial_udf"]
 
 
 def test_normalized_key_collapses_cheap_mutations(spark):

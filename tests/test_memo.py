@@ -109,17 +109,20 @@ def test_crashed_upsert_leaves_state_intact(spark, tmp_path, monkeypatch):
     assert on_disk == live  # orphans collected
 
 
-def test_legacy_unsharded_layout_migrates(spark, tmp_path):
-    """An upsert against a pre-manifest flat parquet memo must adopt it
-    (full one-time rewrite), not fail on the missing shard column."""
+def test_manifestless_dir_reads_as_empty(spark, tmp_path):
+    """Only a manifest names memo data: parquet files in a directory
+    without one read as an empty memo, and the first upsert commits a
+    manifest and collects the unreferenced files."""
+    import os
+
     path = str(tmp_path / "memo")
-    _memo_df(spark, [("u1", 1, T1, "p1", "s1"), ("u2", 2, T1, "p2", "s2")]).write.parquet(path)
+    _memo_df(spark, [("u1", 1, T1, "p1", "s1")]).write.parquet(path)
     memo = HashMemo(spark, path, n_shards=4)
-    memo.upsert(_memo_df(spark, [("u1", 1, T2, None, None), ("u3", 3, T1, "p3", "s3")]))
-    rows = {r["url"]: r for r in memo.read().collect()}
-    assert set(rows) == {"u1", "u2", "u3"}
-    assert rows["u1"]["content_sha256"] == "s1" and rows["u1"]["warc_ts"] == T2
-    assert memo._load_manifest() is not None  # now manifested
+    assert memo.read().count() == 0
+    memo.upsert(_memo_df(spark, [("u3", 3, T1, "p3", "s3")]))
+    assert [r["url"] for r in memo.read().collect()] == ["u3"]
+    live = set(memo._load_manifest()["shards"].values())
+    assert set(os.listdir(path)) == live | {"MANIFEST.json"}
 
 
 def test_clear(spark, tmp_path):

@@ -144,21 +144,20 @@ def test_pack_sequences_shares_the_shuffle_exchange(spark, pages_1k):
     assert "text" not in exchange_columns(packed)
 
 
-def test_estimate_pairs_single_signature_exchange(spark):
-    # estimate_pairs rides the one-pass melt/pivot join: the 1KB-per-row
-    # signature array must cross exactly ONE shuffle (the slice side of
-    # the url join) — the classic double join moved it in two exchange
-    # children plus re-shuffled _sa through the second join.
-    from dedupe_algo_spark.operators.scoring import estimate_pairs
+def test_pair_value_join_single_value_exchange(spark):
+    # The confirm tier's one-pass melt/pivot join: the per-url value
+    # array must cross exactly ONE shuffle (the slice side of the url
+    # join) — the classic double join moved it in two exchange children
+    # plus re-shuffled the first side's value through the second join.
+    from dedupe_algo_spark.operators.scoring import pair_value_join
     from dedupe_algo_spark.plans import exchange_column_sets
 
-    sigs = spark.createDataFrame(
+    values = spark.createDataFrame(
         [("u%d" % i, [i, 2, 3, 4]) for i in range(50)],
         "url string, sig array<bigint>",
-    )
+    ).select("url", F.col("sig").alias("_v"))
     pairs = spark.createDataFrame(
         [("u1", "u2"), ("u3", "u4")], "url_a string, url_b string"
     )
-    per_exchange = exchange_column_sets(estimate_pairs(pairs, sigs, 0.0))
-    sig_exchanges = sum(1 for cols in per_exchange if {"_v", "sig"} & cols)
-    assert sig_exchanges == 1, per_exchange
+    per_exchange = exchange_column_sets(pair_value_join(pairs, values, "_v"))
+    assert sum(1 for cols in per_exchange if "_v" in cols) == 1, per_exchange

@@ -285,3 +285,38 @@ def test_empty_exact_group_suppresses_star_fallback(spark):
         for r in robots_verdicts(pages, rules, agent="*").collect()
     }
     assert star == {"https://h1.com/a": False, "https://h1.com/": False}
+
+
+def test_truncation_drops_the_straddling_line(spark):
+    """A rule line the 500 KiB cut lands inside is dropped, not parsed
+    as a shorter prefix (``Allow: /publ`` would out-match the
+    ``Disallow: /pub`` verdict the intact file gives); a cut that falls
+    exactly at a line end keeps that line. Same for str and binary."""
+    from dedupe_algo_spark.operators.robots import ROBOTS_MAX_BYTES
+
+    head = "User-agent: *\nDisallow: /pub\n"
+    rule = "Allow: /public/docs\n"
+    straddle = len("Allow: /publ")
+    # the cut keeps only the first `straddle` bytes of `rule`
+    fill = "#" * (ROBOTS_MAX_BYTES - len(head) - straddle - 1) + "\n"
+    # the cut falls right before `rule`'s newline
+    at_end = "#" * (ROBOTS_MAX_BYTES - len(head) - len(rule)) + "\n"
+
+    def parsed(body):
+        return {
+            (r.host, r.directive, r.path)
+            for df in (
+                spark.createDataFrame([("s.io", body)], "host string, body string"),
+                spark.createDataFrame(
+                    [("b.io", body.encode())], "host string, body binary"
+                ),
+            )
+            for r in parse_robots(df).collect()
+        }
+
+    cut = parsed(head + fill + rule)
+    assert {p for _, _, p in cut} == {"/pub"}
+    kept = parsed(head + at_end + rule + "Allow: /late\n")
+    assert {(h, p) for h, _, p in kept} == {
+        (h, p) for h in ("s.io", "b.io") for p in ("/pub", "/public/docs")
+    }

@@ -631,3 +631,35 @@ def test_ranged_ingest_refuses_silent_drops(spark, tmp_path):
     )
     with pytest.raises(Exception, match="not gzip"):
         file_member_geometry(spark, str(d)).collect()
+
+
+def test_ranged_ingest_refuses_empty_segment(spark, tmp_path):
+    """A truncated-to-empty segment raises instead of contributing no
+    geometry rows (and so no pages) to the ingest."""
+    import pytest
+
+    from dedupe_algo_spark.sources.warc import file_member_geometry
+
+    d, _ = _ranged_fixture(tmp_path, n_files=1)
+    (d / "seg-empty.warc.gz").write_bytes(b"")
+    with pytest.raises(ValueError, match="empty segment"):
+        file_member_geometry(spark, str(d))
+
+
+def test_local_path_file_url_forms():
+    """``file:/x``, ``file:///x`` and ``file://localhost/x`` name the
+    same local file; a remote authority is an error, not a relative
+    path."""
+    import pytest
+
+    from dedupe_algo_spark.sources.warc import _local_path
+
+    for p in (
+        "file:/data/a;b.warc.gz",
+        "file:///data/a;b.warc.gz",
+        "file://localhost/data/a;b.warc.gz",
+        "/data/a;b.warc.gz",
+    ):
+        assert _local_path(p) == "/data/a;b.warc.gz", p
+    with pytest.raises(ValueError, match="remote host"):
+        _local_path("file://server/data/a.warc.gz")
