@@ -8,13 +8,16 @@ convergence is O(log n) supersteps for any graph, and 2-3 for the
 star/chain shapes dedup produces.
 
 Scale notes:
-* every superstep ends with ``localCheckpoint`` — truncates the lineage
-  so the plan does not grow exponentially across iterations (on a real
-  cluster this is a checkpoint dir / intermediate table write; local
-  mode keeps it in block storage).
+* every superstep ends with an eager ``localCheckpoint``
+  (tracking.CheckpointChain) — truncates the lineage so the plan does
+  not grow exponentially across iterations, and releases the superseded
+  step (on a real cluster this is a checkpoint dir / intermediate table
+  write; local mode keeps it in block storage).
 * convergence test is a one-pass aggregate signature
-  (count + sum of xxhash64 over edges) — no exceptAll anti-join, no
-  collect of the edge set.
+  (count + bit_xor of xxhash64 over edges) observed on the checkpoint
+  job — no exceptAll anti-join, no collect of the edge set.
+* graphs up to :func:`small_graph_limit` canonical edges skip the loop
+  for a driver union-find with the same output contract.
 * node ids are strings (urls); min() is lexicographic — deterministic.
 """
 
@@ -90,7 +93,7 @@ def _mem_to_bytes(mem: str) -> int:
 
 
 def small_graph_limit(spark) -> int:
-    """Derived ``small_graph_edges`` default:
+    """Largest canonical edge count solved by the driver union-find:
     ``min(1M, driver_memory / 4KiB-per-edge)``."""
     try:
         mem = spark.conf.get("spark.driver.memory", "1g")
@@ -149,141 +152,87 @@ def _local_cc(edges: DataFrame) -> DataFrame:
     return out
 
 
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+# Superstep cap of the distributed loop. Dedup-shaped graphs (stars,
+# cliques, chains) converge in 2-3 supersteps; the cap only bounds
+# pathological inputs.
+MAX_ITER = 25
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    checkpoint: bool = True,
-    small_graph_edges: int | None = None,
-    tracker=None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, tracker=None) -> DataFrame:
     """→ (url, component) assignment for every node appearing in edges.
 
     ``component`` is the lexicographic min url of the component. Nodes
     not present in any edge are singletons and simply absent here.
 
-    Graphs whose canonical edge set is ≤ ``small_graph_edges`` are
-    solved with a driver-side union-find (same output, ~1 job instead of
-    ~10 per superstep); the default (``None``) derives the bound from
-    the driver heap via :func:`small_graph_limit`; pass 0 to force the
-    distributed path.
+    Graphs whose canonical edge set is ≤ :func:`small_graph_limit`
+    (derived from the driver heap) are solved with a driver-side
+    union-find (same output, ~1 job instead of ~10 per superstep);
+    larger ones run the distributed large-star/small-star loop.
 
-    Checkpoint hygiene: each superstep's eager ``localCheckpoint``
-    supersedes its parent, which is unpersisted immediately — only ONE
-    superstep's blocks are ever live. The final checkpoint backs the
-    returned DataFrame; its RDD ids are registered on ``tracker``
-    (a :class:`~dedupe_algo_spark.tracking.PersistTracker`) if given, so
-    the caller can release it after consuming the assignment.
+    Checkpoint hygiene: the canonical edges and every superstep go
+    through one :class:`~dedupe_algo_spark.tracking.CheckpointChain`,
+    so only ONE superstep's blocks are ever live. The final checkpoint
+    backs the returned DataFrame; its RDD ids are registered on
+    ``tracker`` (a :class:`~dedupe_algo_spark.tracking.PersistTracker`)
+    if given, so the caller can release it after consuming the
+    assignment. The union-find path leaves no checkpoint behind.
     """
-    from ..tracking import checkpoint_rdd_ids, persistent_rdd_ids, unpersist_rdd_ids
+    from pyspark.sql import Observation
+
+    from ..tracking import CheckpointChain
 
     spark = edges.sparkSession
-    live: set[int] = set()  # RDD ids of the current (newest) checkpoint
-    before = persistent_rdd_ids(spark) if checkpoint else set()
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        nonlocal live, before
-        out = df.localCheckpoint(eager=True)
-        # Identify the checkpoint's OWN rdd id(s), precisely: the
-        # checkpointed DataFrame's LogicalRDD holds the persisted RDD.
-        # The persistent-RDD-set delta is only the fallback — a stage
-        # cache materialized by this same job (the first action of a
-        # lazy pipeline often runs inside the first checkpoint) lands
-        # in the delta and would get wrongly unpersisted later, forcing
-        # its consumers (audit flush, cluster join) to recompute — a
-        # measured 23s re-read of the confirm shuffle at 4M pages.
-        ids = checkpoint_rdd_ids(out)
-        now = persistent_rdd_ids(spark)
-        if ids is None:
-            ids = now - before
-        unpersist_rdd_ids(spark, live)  # parent superstep is superseded
-        live = ids
-        before = now
+    chain = CheckpointChain(spark)
+    cur = chain.step(
+        _canonical(
+            edges.select(
+                F.col(edges.columns[0]).alias("src"),
+                F.col(edges.columns[1]).alias("dst"),
+            )
+        )
+    )
+    # The size decision is one count over the canonical edge set, which
+    # the eager checkpoint above already materialized: the count scans
+    # block-manager blocks (sub-second) without recomputing the edges.
+    # (A previous stream-and-abort design that folded the decision into
+    # a coalesce(1) iterator saved this count but paid a 6.2s
+    # single-threaded drain at 4M pages.)
+    if cur.count() <= small_graph_limit(spark):
+        out = _local_cc(cur)
+        # the union-find consumed the edges; the canonical checkpoint is
+        # dead weight (the result is Arrow/driver-backed)
+        chain.release()
         return out
-
-    if small_graph_edges is None:
-        small_graph_edges = small_graph_limit(spark)
-    cur = _canonical(edges.select(F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")))
-    if checkpoint:
-        cur = _ckpt(cur)
-    base_cache = None
-    if small_graph_edges:
-        # The size decision is one count over the canonical edge set. On
-        # the checkpointed path it is already materialized by the eager
-        # localCheckpoint above, so the count scans block-manager blocks
-        # (sub-second) without recomputing the edges. (A previous
-        # stream-and-abort design that folded the decision into a
-        # coalesce(1) iterator saved this count but paid a 6.2s
-        # single-threaded drain at 4M pages.) Without checkpointing,
-        # persist the canonical edges first so the count and their
-        # consumer (_local_cc's toPandas, or the first superstep) share
-        # one computation instead of running the edge plan twice.
-        if not checkpoint:
-            base_cache = cur = cur.persist()
-        if cur.count() <= small_graph_edges:
-            out = _local_cc(cur)
-            # the union-find consumed the edges; the canonical checkpoint
-            # / cache is dead weight (the result is Arrow/driver-backed)
-            unpersist_rdd_ids(spark, live)
-            if base_cache is not None:
-                base_cache.unpersist()
-            return out
     prev_sig = None
-    for i in range(max_iter):
-        cur = _canonical(_small_star(_large_star(cur)))
-        if checkpoint:
-            # convergence signature piggybacks on the checkpoint job
-            # itself: CollectMetrics rides the eager materialization
-            # (localCheckpoint runs under withAction, so the observed
-            # (count, bit_xor) lands with ZERO extra jobs or driver
-            # round-trips per superstep — previously a separate
-            # two-stage agg-collect each iteration)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            cur = cur.observe(
+    for _ in range(MAX_ITER):
+        # convergence signature (count, bit_xor of edge hashes) piggybacks
+        # on the checkpoint job itself: CollectMetrics rides the eager
+        # materialization (localCheckpoint runs under withAction), so it
+        # costs ZERO extra jobs or driver round-trips per superstep
+        obs = Observation()
+        cur = chain.step(
+            _canonical(_small_star(_large_star(cur))).observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(
                     F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)
                 ).alias("h"),
             )
-            cur = _ckpt(cur)
-            m = obs.get
-            sig = (int(m["n"]), int(m["h"]))
-        else:
-            # uncheckpointed path: no materializing job to ride — the
-            # signature stays its own two-stage agg over the lineage
-            # (a wasted superstep is ~10 shuffle jobs, so eager checking
-            # still minimizes total job count; star/clique edge sets --
-            # the dedup shape -- converge at superstep 2)
-            sig = _signature(cur)
-        if base_cache is not None:
-            # the non-checkpoint input cache fed the first superstep's
-            # signature pass; later iterations re-derive from lineage
-            base_cache.unpersist()
-            base_cache = None
+        )
+        m = obs.get
+        sig = (int(m["n"]), int(m["h"]))
         if sig == prev_sig:
             break
         prev_sig = sig
-    if tracker is not None and live:
-        tracker.adopt_ids(spark, live)
+    if tracker is not None:
+        tracker.adopt_ids(spark, chain.live)
     # fixpoint: every edge is (member, root). Roots map to themselves.
     members = cur.select(F.col("src").alias("url"), F.col("dst").alias("component"))
     roots = cur.select(F.col("dst").alias("url"), F.col("dst").alias("component")).distinct()
     return members.union(roots).groupBy("url").agg(F.min("component").alias("component"))
 
 
-def merge_clusters(
-    assignments: DataFrame, new_edges: DataFrame, **cc_kwargs
-) -> DataFrame:
+def merge_clusters(assignments: DataFrame, new_edges: DataFrame) -> DataFrame:
     """→ (url, component): an existing cluster assignment updated with
     a batch of new match edges, recomputing ONLY the clusters the
     batch touches — the incremental counterpart of
@@ -330,6 +279,6 @@ def merge_clusters(
         .where(F.col("url") != F.col("component"))
         .select(F.col("component").alias("src"), F.col("url").alias("dst"))
     )
-    merged = connected_components(star.unionByName(e), **cc_kwargs)
+    merged = connected_components(star.unionByName(e))
     untouched = a.join(touched_comp, "component", "left_anti")
     return untouched.unionByName(merged.select("url", "component"))

@@ -9,10 +9,11 @@ well-linked host is worth more than a spam farm's).
   dangling-mass redistribution, iterated a fixed number of steps.
   Each step is one join + one aggregate on (node, double) rows —
   O(edges) shuffle of an 8-byte payload, never page bodies. The rank
-  frame is ``localCheckpoint``-ed per step so the plan does not grow
-  with iterations (same discipline as the CC operator,
-  operators/cluster.py); the dangling mass is one scalar ``first()``
-  per step — a driver barrier that moves 8 bytes.
+  frame is ``localCheckpoint``-ed per step through the same
+  checkpoint chain as the CC operator (tracking.CheckpointChain), so
+  the plan does not grow with iterations and superseded steps are
+  released; the dangling mass is a broadcast one-row aggregate inside
+  the step's own plan.
 
 Public references: Page et al. 1999; the dangling-node uniform
 redistribution is the standard formulation (Berkhin 2005 survey).
@@ -70,7 +71,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Damped PageRank over ``edges``; returns (node, pagerank).
 
@@ -83,22 +83,28 @@ def pagerank(
     Superstep cost: ONE job per iteration (the eager checkpoint that
     truncates the join lineage). The dangling mass is a one-row
     aggregate broadcast back into the same plan (the scalar-subquery
-    shape), NOT a driver ``first()`` — through round 4 that collect
-    was a second driver-blocking job every superstep, the same
-    fixed-latency barrier class the connected-components Observation
-    fold removed; on a 200-host graph the barrier latency, not the
-    data, dominated a 10-iteration run."""
+    shape), NOT a driver ``first()`` — such a collect would be a second
+    driver-blocking job every superstep; on a 200-host graph the barrier
+    latency, not the data, dominated a 10-iteration run.
+
+    Checkpoint hygiene: the rank frames go through one
+    :class:`~dedupe_algo_spark.tracking.CheckpointChain` and the
+    per-edge shares are released once the last superstep is
+    materialized, so only the checkpoint backing the returned frame
+    stays persisted."""
+    from ..tracking import CheckpointChain
+
+    spark = edges.sparkSession
+    ranks = CheckpointChain(spark)
     w = F.col(weight_col) if weight_col else F.lit(1)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     )
-    nodes = (
+    nodes = ranks.step(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         # empty graph (e.g. a corpus with no absolute links): an empty
@@ -107,62 +113,50 @@ def pagerank(
             F.col("node"), F.lit(0.0).alias("pagerank")
         ).limit(0)
     outdeg = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    e = e.join(outdeg, "src").select(
-        "src", "dst", (F.col("w") / F.col("outw")).alias("share")
+    shares = CheckpointChain(spark)
+    e = shares.step(
+        e.join(outdeg, "src").select(
+            "src", "dst", (F.col("w") / F.col("outw")).alias("share")
+        )
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
     # nodes tagged once with has-outlinks membership so each
     # superstep can aggregate the dangling mass without an anti-join
     has_out = outdeg.select(F.col("src").alias("node"), F.lit(True).alias("_has"))
-    tagged = nodes.join(has_out, "node", "left").select(
-        "node", F.coalesce("_has", F.lit(False)).alias("_has")
+    pr = ranks.step(
+        nodes.join(has_out, "node", "left").select(
+            "node",
+            F.coalesce("_has", F.lit(False)).alias("_has"),
+            F.lit(1.0 / n).alias("pr"),
+        )
     )
-    if checkpoint:
-        tagged = tagged.localCheckpoint(eager=True)
-    pr = tagged.select("node", "_has", F.lit(1.0 / n).alias("pr"))
     for _ in range(iterations):
-        if checkpoint:
-            # dangling mass as a broadcast ONE-ROW aggregate inside the
-            # superstep's own plan — no driver collect, no extra job.
-            # Safe ONLY because the eager checkpoint below truncates
-            # lineage per step: this shape references ``pr`` twice (here
-            # and in inflow), which without truncation would double the
-            # logical plan per iteration.
-            dang = (
-                pr.where(~F.col("_has"))
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dang"))
-            )
-            dang_term = F.col("_dang")
-        else:
-            # checkpoint=False (tests / tiny graphs): keep plan growth
-            # LINEAR by collecting the scalar driver-side — the single
-            # remaining ``pr`` reference per iteration. The folded
-            # aggregate above would nest ~2^iterations plan copies.
-            dang_val = (
-                pr.where(~F.col("_has"))
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-            )
-            dang_term = F.lit(dang_val)
+        # dangling mass as a broadcast ONE-ROW aggregate inside the
+        # superstep's own plan — no driver collect, no extra job. Safe
+        # because the eager checkpoint truncates lineage per step: the
+        # plan references ``pr`` three times, which without truncation
+        # would multiply the logical plan per iteration.
+        dang = pr.where(~F.col("_has")).agg(
+            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dang")
+        )
         inflow = (
             e.join(pr, e.src == pr.node)
             .select("dst", (F.col("pr") * F.col("share")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        pr = tagged.join(inflow, tagged.node == inflow.dst, "left")
-        if checkpoint:
-            pr = pr.crossJoin(F.broadcast(dang))
-        pr = pr.select(
-            "node",
-            "_has",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce("inflow", F.lit(0.0)) + dang_term / n)
-            ).alias("pr"),
+        tagged = pr.select("node", "_has")
+        pr = ranks.step(
+            tagged.join(inflow, tagged.node == inflow.dst, "left")
+            .crossJoin(F.broadcast(dang))
+            .select(
+                "node",
+                "_has",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce("inflow", F.lit(0.0)) + F.col("_dang") / n)
+                ).alias("pr"),
+            )
         )
-        if checkpoint:
-            pr = pr.localCheckpoint(eager=True)
+    shares.release()
     return pr.select("node", F.col("pr").alias("pagerank"))

@@ -159,7 +159,9 @@ def confirm_pairs(
     first three): ``"jaccard"`` (default — exact token-set Jaccard, the
     right scorer for whole web pages), ``"jaro_winkler"`` (batched
     pandas UDF on 512-char prefixes), ``"levenshtein"`` (JVM built-in
-    1−dist/max on 512-char prefixes), or ``"ngram_jaccard"`` (JVM
+    1−dist/max on 512-char prefixes), ``"damerau"`` (batched pandas UDF,
+    1−Damerau–Levenshtein/max on 512-char prefixes — transpositions cost
+    1, not 2), or ``"ngram_jaccard"`` (JVM
     character-5-gram set Jaccard on the same prefixes — order-robust
     like token Jaccard but sub-word-granular, the dial for boilerplate
     with small edits). The prefix scorers exist for fielded-record

@@ -40,6 +40,7 @@ from .operators.candidates import (
 from .operators.cluster import connected_components
 from .operators.dedup import assign_exact, page_meta, page_meta_incremental
 from .operators.scoring import (
+    BROADCAST_URL_LIMIT,
     DEFAULT_MIN_BAND_MATCHES,
     DEFAULT_THRESHOLD,
     band_gate,
@@ -87,8 +88,6 @@ def dedup_pipeline(
     pages: DataFrame,
     min_len: int = 10,
     threshold: float = DEFAULT_THRESHOLD,
-    min_band_matches: int = DEFAULT_MIN_BAND_MATCHES,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
     include_near: bool = True,
     scorer: str = "jaccard",
     exact_key: str = "raw",
@@ -103,11 +102,15 @@ def dedup_pipeline(
     to the audit table even in a plain un-checkpointed run; pass
     ``runner.CheckpointedRun.stage`` for resumable stage commits on top,
     or ``lambda name, fn: fn()`` to opt out entirely.
-    The near path is always LSH band keys → band-collision gate
-    (``min_band_matches``) → exact confirm at ``threshold``.
-    ``scorer`` selects the tier-2 similarity ("jaccard" | "jaro_winkler"
-    | "levenshtein" | "ngram_jaccard" — see
+    The near path is always LSH band keys (hot buckets over
+    ``DEFAULT_MAX_BUCKET`` dropped) → band-collision gate
+    (``DEFAULT_MIN_BAND_MATCHES``) → exact confirm at ``threshold``.
+    ``scorer`` selects the tier-2 similarity ("jaccard" | "containment"
+    | "jaro_winkler" | "levenshtein" | "damerau" | "ngram_jaccard" |
+    "tfidf" | "weighted_jaccard" — see
     :func:`~.operators.scoring.confirm_pairs`).
+    ``include_near=False`` keeps the exact tier only: the clusters are
+    the exact groups, built without a connected-components job.
     ``exact_key="normalized"`` keys the exact tier on the CCNet-style
     normalized text view (casing/punctuation/whitespace/counter
     mutations become exact duplicates — see
@@ -175,13 +178,13 @@ def dedup_pipeline(
             # signature table is ever joined back onto the pairs.
             pairs = candidate_pairs(
                 bucket_table_from_bands(rep_bands),
-                max_bucket=max_bucket,
+                max_bucket=DEFAULT_MAX_BUCKET,
                 with_counts=True,
                 tracker=tracker,
             )
-            cands = band_gate(pairs, min_matches=min_band_matches).select(
-                "url_a", "url_b"
-            )
+            cands = band_gate(
+                pairs, min_matches=DEFAULT_MIN_BAND_MATCHES
+            ).select("url_a", "url_b")
             return confirm_pairs(
                 cands, pages, threshold=threshold, tracker=tracker, scorer=scorer
             )
@@ -203,47 +206,45 @@ def dedup_pipeline(
                 tracker=tracker,
             ),
         )
+        comp = rep_comp.select(
+            F.col("url").alias("rep_url"), F.col("component")
+        )
+        # The component map is RDD-backed (driver union-find) or a small
+        # checkpointed aggregate — either way Catalyst has no size stats and
+        # plants a sort-merge join that shuffles the whole assigned table
+        # (measured 3.6GB at 4M pages) against a ~MB map. The union-find
+        # fast path counted its rows while building them and carries the
+        # count on the DataFrame, so the broadcast decision costs zero extra
+        # jobs on that common path; a distributed-CC or checkpointed-runner
+        # run (whose stage hook re-reads parquet, dropping the attribute)
+        # pays one count. At 10^12 rows a billion-row component map
+        # correctly falls back to the shuffle join.
+        n_comp = getattr(rep_comp, "_dedupe_known_rows", None)
+        if n_comp is None:
+            n_comp = comp.count()
+        if n_comp <= BROADCAST_URL_LIMIT:
+            comp = F.broadcast(comp)
+        clusters = (
+            assigned.select("url", "rep_url", "cluster_size")
+            .join(comp, "rep_url", "left")
+            .where((F.col("cluster_size") >= 2) | F.col("component").isNotNull())
+            .select(
+                "url",
+                F.coalesce(F.col("component"), F.col("rep_url")).alias("cluster_id"),
+                F.when(F.col("cluster_size") >= 2, F.lit("exact"))
+                .otherwise(F.lit("near"))
+                .alias("match_kind"),
+            )
+        )
     else:
+        # no near edges: the exact groups ARE the clusters (each already
+        # labelled by its min-url representative), so no CC job runs
         all_edges = exact_edges
-        rep_comp = connected_components(
-            exact_edges.limit(0).select(
-                F.col("url_a").alias("src"), F.col("url_b").alias("dst")
-            ),
-            tracker=tracker,
-        )
-
-    comp = rep_comp.select(
-        F.col("url").alias("rep_url"), F.col("component")
-    )
-    # The component map is RDD-backed (driver union-find) or a small
-    # checkpointed aggregate — either way Catalyst has no size stats and
-    # plants a sort-merge join that shuffles the whole assigned table
-    # (measured 3.6GB at 4M pages) against a ~MB map. The union-find
-    # fast path counted its rows while building them and carries the
-    # count on the DataFrame, so the broadcast decision costs zero extra
-    # jobs on that common path; a distributed-CC or checkpointed-runner
-    # run (whose stage hook re-reads parquet, dropping the attribute)
-    # pays one count. At 10^12 rows a billion-row component map
-    # correctly falls back to the shuffle join.
-    from .operators.scoring import BROADCAST_URL_LIMIT
-
-    n_comp = getattr(rep_comp, "_dedupe_known_rows", None)
-    if n_comp is None:
-        n_comp = comp.count()
-    if n_comp <= BROADCAST_URL_LIMIT:
-        comp = F.broadcast(comp)
-    clusters = (
-        assigned.select("url", "rep_url", "cluster_size")
-        .join(comp, "rep_url", "left")
-        .where((F.col("cluster_size") >= 2) | F.col("component").isNotNull())
-        .select(
+        clusters = assigned.where(F.col("cluster_size") >= 2).select(
             "url",
-            F.coalesce(F.col("component"), F.col("rep_url")).alias("cluster_id"),
-            F.when(F.col("cluster_size") >= 2, F.lit("exact"))
-            .otherwise(F.lit("near"))
-            .alias("match_kind"),
+            F.col("rep_url").alias("cluster_id"),
+            F.lit("exact").alias("match_kind"),
         )
-    )
     # deferred lineage: one batched count-and-append over the (already
     # materialized) stage caches — see audit_stage_hook
     flush = getattr(stage, "flush", None)

@@ -1,25 +1,35 @@
 """Connected components: correctness on adversarial graph shapes.
 
 Every case runs through BOTH paths — the driver union-find fast path
-(small_graph_edges default) and the distributed large-star/small-star
-loop (small_graph_edges=0) — which must produce identical labels.
+(the derived ``small_graph_limit``) and the distributed
+large-star/small-star loop (``small_graph_limit`` monkeypatched to 0)
+— which must produce identical labels.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from dedupe_algo_spark.operators import cluster
 from dedupe_algo_spark.operators.cluster import connected_components
 
 
-@pytest.fixture(params=[0, 1_000_000], ids=["distributed", "local-fastpath"])
-def _cc(spark, request):
+def _force_distributed(monkeypatch, limit: int = 0) -> None:
+    """Route graphs over ``limit`` canonical edges to the star loop."""
+    monkeypatch.setattr(cluster, "small_graph_limit", lambda spark: limit)
+
+
+@pytest.fixture(params=["distributed", "local-fastpath"])
+def _cc(spark, request, monkeypatch):
+    if request.param == "distributed":
+        _force_distributed(monkeypatch)
+
     def run(spark_, edges):
         df = spark_.createDataFrame(edges, ["src", "dst"])
-        out = connected_components(df, small_graph_edges=request.param).collect()
+        out = connected_components(df).collect()
         return {r["url"]: r["component"] for r in out}
 
-    return lambda spark_, edges: run(spark_, edges)
+    return run
 
 
 def test_two_components(spark, _cc):
@@ -55,45 +65,66 @@ def test_component_id_is_lexicographic_min(spark, _cc):
     assert set(m.values()) == {"b"}
 
 
-def test_small_graph_limit_derived_from_driver_memory(spark):
+def test_small_graph_limit_derived_from_driver_memory():
     """The union-find fast-path bound derives from the driver heap
     (min(1M cap, mem/4KiB-per-edge)) instead of a fixed constant."""
+    from types import SimpleNamespace
+
     from dedupe_algo_spark.operators.cluster import (
         SMALL_GRAPH_EDGES_CAP,
-        _EDGE_MEM_BUDGET,
         _mem_to_bytes,
         small_graph_limit,
     )
 
+    def session(mem):
+        return SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: mem))
+
     assert _mem_to_bytes("16g") == 16 << 30
     assert _mem_to_bytes("512m") == 512 << 20
     assert _mem_to_bytes("2048") == 2048 << 20  # bare number = MiB
-    # the session driver (16g) derives 4M edges → the 1M cap binds
-    assert small_graph_limit(spark) == SMALL_GRAPH_EDGES_CAP
+    # a 16g driver derives 4M edges → the 1M cap binds
+    assert small_graph_limit(session("16g")) == SMALL_GRAPH_EDGES_CAP
     # a small driver derives a proportionally smaller bound
-    assert (512 << 20) // _EDGE_MEM_BUDGET == 131_072 < SMALL_GRAPH_EDGES_CAP
+    assert small_graph_limit(session("512m")) == 131_072
 
 
-def test_non_checkpoint_smallgraph_single_compute(spark):
-    """checkpoint=False + fast path: the canonical edges are persisted so
-    the size count and _local_cc share one computation (ADVICE r3)."""
+def test_fast_path_leaves_nothing_persisted(spark):
+    """The union-find path consumes the canonical-edge checkpoint and
+    releases it: no persisted RDD of ours is left behind."""
     from dedupe_algo_spark.tracking import persistent_rdd_ids
 
     before = persistent_rdd_ids(spark)
     edges = [(f"n{i}", f"n{i+1}") for i in range(50)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    out = connected_components(df, checkpoint=False)
+    out = connected_components(df)
     m = {r["url"]: r["component"] for r in out.collect()}
     assert set(m.values()) == {"n0"} and len(m) == 51
-    # nothing of ours left persisted behind
     assert persistent_rdd_ids(spark) - before == set()
 
 
-def test_threshold_boundary_both_paths_identical(spark):
-    """Stress the small_graph_edges boundary on a realistic dedup-shaped
+def test_distributed_path_tracker_releases_checkpoint(spark, monkeypatch):
+    """The star loop keeps only its final superstep's checkpoint, which
+    backs the result; registered on a tracker, one release drops it."""
+    from dedupe_algo_spark.tracking import PersistTracker, persistent_rdd_ids
+
+    _force_distributed(monkeypatch)
+    before = persistent_rdd_ids(spark)
+    edges = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(30)]
+    tracker = PersistTracker()
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    out = connected_components(df, tracker=tracker)
+    m = {r["url"]: r["component"] for r in out.collect()}
+    assert set(m.values()) == {"n00"} and len(m) == 31
+    assert len(persistent_rdd_ids(spark) - before) == 1
+    tracker.release()
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_threshold_boundary_both_paths_identical(spark, monkeypatch):
+    """Stress the small_graph_limit boundary on a realistic dedup-shaped
     graph (stars, chains, cliques, cross links): the same edge set run
-    just OVER the threshold (distributed path forced) and under it
-    (driver union-find) must produce identical labels."""
+    just OVER the limit (distributed path) and AT it (driver
+    union-find) must produce identical labels."""
     import random
 
     rng = random.Random(7)
@@ -114,14 +145,10 @@ def test_threshold_boundary_both_paths_identical(spark):
     from dedupe_algo_spark.operators.cluster import _canonical
 
     n_canon = _canonical(df).count()
-    dist = {
-        (r["url"], r["component"])
-        for r in connected_components(df, small_graph_edges=n_canon - 1).collect()
-    }
-    fast = {
-        (r["url"], r["component"])
-        for r in connected_components(df, small_graph_edges=n_canon).collect()
-    }
+    _force_distributed(monkeypatch, n_canon - 1)
+    dist = {(r["url"], r["component"]) for r in connected_components(df).collect()}
+    _force_distributed(monkeypatch, n_canon)
+    fast = {(r["url"], r["component"]) for r in connected_components(df).collect()}
     assert dist == fast and len(dist) > 1000
 
 

@@ -94,24 +94,19 @@ def test_pagerank_empty_graph_returns_empty(spark):
     assert out.count() == 0
 
 
-def test_pagerank_checkpoint_modes_agree(spark):
-    """checkpoint=False (driver-scalar dangling, linear plan growth)
-    and checkpoint=True (folded broadcast aggregate + localCheckpoint)
-    must produce identical ranks — the two dangling-mass mechanisms
-    are alternative plumbings of the same arithmetic."""
-    from dedupe_algo_spark.operators.linkgraph import pagerank
+def test_pagerank_keeps_only_the_result_checkpoint(spark):
+    """Every superstep is checkpointed and supersedes the last; the
+    node set, initial ranks and edge shares are released too — only
+    the checkpoint backing the returned frame stays persisted."""
+    from dedupe_algo_spark.tracking import persistent_rdd_ids
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
-        "src string, dst string",
-    )
-    with_cp = {
-        r["node"]: round(r["pagerank"], 12)
-        for r in pagerank(edges, iterations=6, checkpoint=True).collect()
-    }
-    no_cp = {
-        r["node"]: round(r["pagerank"], 12)
-        for r in pagerank(edges, iterations=6, checkpoint=False).collect()
-    }
-    assert with_cp == no_cp
-    assert abs(sum(no_cp.values()) - 1.0) < 1e-9
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    before = persistent_rdd_ids(spark)
+    out = pagerank(edges, iterations=6)
+    assert len(persistent_rdd_ids(spark) - before) == 1
+    got = {r.node: r.pagerank for r in out.collect()}
+    ref = _ref_pagerank(pairs, 6, 0.85)
+    assert set(got) == set(ref)
+    for v in ref:
+        assert abs(got[v] - ref[v]) < 1e-12, v
